@@ -108,10 +108,13 @@ def _repair_partitions(spark: "SparkSession") -> int:
                spark.sparkContext.defaultParallelism)
 
 
-def repair_frame(gaps: "DataFrame", fetcher: Fetcher) -> "DataFrame":
+def repair_frame(gaps: "DataFrame", fetcher: Fetcher,
+                 n_ranges: int) -> "DataFrame":
     """Distributed T6 repair: gap ranges in, repaired trades out.
 
-    The ranges frame hash-shuffles across ``_REPAIR_PARTITIONS`` tasks
+    The ``n_ranges`` rows of ``gaps`` hash-shuffle across
+    ``min(n_ranges, _repair_partitions())`` tasks, so a one-range gap runs
+    one repair task and a burst still spreads over the 32-task floor
     (ranges are independent, so any placement is correct); each task runs
     the :func:`backfill_gaps` paging kernel against its ranges and yields
     Arrow batches of repaired trades. Rows are born on executors — the
@@ -160,6 +163,6 @@ def repair_frame(gaps: "DataFrame", fetcher: Fetcher) -> "DataFrame":
             })
 
     ranges = gaps.select("product_id", "gap_first_id", "gap_last_id")
-    return (ranges.repartition(_repair_partitions(gaps.sparkSession),
-                               "product_id", "gap_first_id")
+    parts = max(1, min(n_ranges, _repair_partitions(gaps.sparkSession)))
+    return (ranges.repartition(parts, "product_id", "gap_first_id")
             .mapInPandas(fetch, schema=_REPAIR_SCHEMA))

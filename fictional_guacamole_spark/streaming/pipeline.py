@@ -10,10 +10,16 @@ by the backfill operator before the batch commits. Micro-batches replace
 the reference's Redis hand-off (T7); the per-row-INSERT sink
 (/root/reference/db_utils.py:24-31) becomes vectorized columnar appends.
 
-Scale posture: sink tables are partitioned by product_id (and date at
-cluster scale); the stateful shuffle is keyed by product_id so book state
-for distinct products lives on distinct executors; checkpointing makes
-restarts exactly-once into the idempotent parquet appends.
+Scale posture: each sink of each micro-batch is one flat directory,
+``<sink>/<sub>/_batch=<id>``, written by one static overwrite with its rows
+sorted by product_id. A directory per product per batch would cost
+O(products x triggers) small files (about 11 M a day at 64 products and
+one trigger per second, each file a few KB); the flat layout writes at most
+one file per task, and per-product reads still prune through the parquet
+min/max statistics of the sorted column. The stateful shuffle is keyed by
+product_id, so book state for distinct products lives on distinct
+executors; checkpointing makes restarts exactly-once into the idempotent
+per-batch overwrites.
 """
 
 from __future__ import annotations
@@ -74,16 +80,21 @@ def make_batch_writer(sink_dir: str, fetcher: Fetcher | None = None,
     into their own parquet sink."""
 
     def write_idempotent(df: DataFrame, sub: str, batch_id: int) -> None:
-        """Exactly-once append: each write lands in a `_batch=<id>`
-        partition with dynamic overwrite, so a replayed micro-batch (after
-        a crash between sink write and checkpoint commit) REPLACES its own
-        partition instead of duplicating rows. This is the parquet
-        equivalent of a transactional sink's (queryId, batchId) dedup."""
-        (df.withColumn("_batch", F.lit(batch_id))
+        """Exactly-once append: each write is a static overwrite of its
+        own ``<sub>/_batch=<id>`` directory, so a replayed micro-batch
+        (after a crash between sink write and checkpoint commit) REPLACES
+        that directory instead of duplicating rows. This is the parquet
+        equivalent of a transactional sink's (queryId, batchId) dedup.
+
+        ``product_id`` is an ordinary column, sorted within each file so
+        parquet min/max statistics prune per-product reads. Partitioning
+        by it as well would write one small file per product per batch
+        (O(products x triggers) files) for no gain in exactly-once;
+        readers still see ``_batch`` (from the directory name) and
+        ``product_id`` by name."""
+        (df.sortWithinPartitions("product_id")
          .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_batch", "product_id")
-         .parquet(os.path.join(sink_dir, sub)))
+         .parquet(os.path.join(sink_dir, sub, f"_batch={batch_id}")))
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # CACHE the micro-batch before demuxing (r14, measured at sf1):
@@ -98,25 +109,25 @@ def make_batch_writer(sink_dir: str, fetcher: Fetcher | None = None,
         try:
             books, trades, gaps = demux_outputs(batch_df)
             write_idempotent(books, "books", batch_id)
-            # gaps are empty for most healthy micro-batches: check once
-            # and gate BOTH the repair (a repartition + mapInPandas stage
-            # that would otherwise run 32 empty tasks per trigger) and
-            # the audit sink on it
-            have_gaps = not gaps.isEmpty()
+            # gaps are empty for most healthy micro-batches: count the
+            # (small: coalesced ranges, not ids) frame once and gate BOTH
+            # the repair (a repartition + mapInPandas stage that would
+            # otherwise run empty tasks every trigger) and the audit sink
+            # on it
+            n_ranges = gaps.count()
+            have_gaps = n_ranges > 0
             # backfill BEFORE the trades write so live + repaired rows
             # land in one idempotent write (a second write into the same
-            # _batch partition would overwrite the first). The repair is
+            # _batch directory would overwrite the first). The repair is
             # fully executor-side: the bounded RANGES frame (never rows —
             # see MAX_BACKFILL_RANGES_PER_BATCH above) maps through the
             # fetcher with mapInPandas, so an outage-sized gap expands to
             # its id width inside executor tasks, and the driver never
             # holds a repaired row (r12 verdict weak-row fix).
             if fetcher is not None and have_gaps:
-                # count the (small: coalesced ranges, not ids) frame once
-                # so a burst past the cap is LOUD — the dropped ranges
-                # stay durable in the gaps sink below, but silence here
-                # would contradict the engine's no-silent-caps posture
-                n_ranges = gaps.count()
+                # a burst past the cap is LOUD — the dropped ranges stay
+                # durable in the gaps sink below, but silence here would
+                # contradict the engine's no-silent-caps posture
                 if n_ranges > max_backfill_ranges:
                     logger.warning(
                         "backfill cap hit in batch %d: %d gap ranges "
@@ -126,8 +137,9 @@ def make_batch_writer(sink_dir: str, fetcher: Fetcher | None = None,
                         "catch-up pass)", batch_id, n_ranges,
                         max_backfill_ranges,
                         n_ranges - max_backfill_ranges)
-                repaired = repair_frame(gaps.limit(max_backfill_ranges),
-                                        fetcher)
+                repaired = repair_frame(
+                    gaps.limit(max_backfill_ranges), fetcher,
+                    min(n_ranges, max_backfill_ranges))
                 trades = trades.unionByName(repaired.select(*TRADE_COLS))
             write_idempotent(trades, "trades", batch_id)
             if have_gaps:
@@ -258,7 +270,7 @@ def create_sink_tables(spark: SparkSession, sink_dir: str) -> None:
     for table, (sub, ddl) in specs.items():
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         spark.sql(
-            f"CREATE TABLE {table} ({ddl}, _batch BIGINT, product_id STRING) "
-            f"USING PARQUET PARTITIONED BY (_batch, product_id) "
+            f"CREATE TABLE {table} (product_id STRING, {ddl}, _batch BIGINT) "
+            f"USING PARQUET PARTITIONED BY (_batch) "
             f"LOCATION '{os.path.join(sink_dir, sub)}'")
         spark.sql(f"ALTER TABLE {table} RECOVER PARTITIONS")

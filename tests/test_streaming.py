@@ -6,6 +6,7 @@ compat views. Frames follow the protocols documented in FIXTURES.md §A3."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -252,6 +253,14 @@ class TestStreamingEndToEnd:
         assert books.count() == 3
         gaps = spark.read.parquet(f"{sink}/gaps")
         assert gaps.count() == 1
+        # flat sinks: one _batch=<id> directory per batch, none per product
+        assert sorted(os.listdir(sink)) == ["books", "gaps", "trades"]
+        for sub in os.listdir(sink):
+            batches = [d for d in os.listdir(os.path.join(sink, sub))
+                       if not d.startswith(".")]
+            assert batches and all(d.startswith("_batch=") for d in batches)
+            for _root, dirs, _files in os.walk(os.path.join(sink, sub)):
+                assert not [d for d in dirs if d.startswith("product_id=")]
         # K3: catalog tables over the sinks
         create_sink_tables(spark, sink)
         assert spark.table("exchange_trades").count() == 4
@@ -291,6 +300,81 @@ class TestStreamingEndToEnd:
         q2.stop()
         trades = spark.read.parquet(f"{sink}/trades")
         assert trades.count() == 2  # not doubled
+
+
+def _batch_frame(spark, rows):
+    """A kernel-output micro-batch (OUTPUT_SCHEMA) from partial rows."""
+    import datetime as dt
+
+    from fictional_guacamole_spark.operators.book import OUTPUT_SCHEMA
+
+    ts = dt.datetime(2024, 1, 5, 10, 0, 0)
+    full = [{"server_ts": ts, "backfilled": False, **r} for r in rows]
+    return spark.createDataFrame(full, OUTPUT_SCHEMA)
+
+
+def _book(pid, bid):
+    return {"out_type": "book", "product_id": pid, "bids": [bid],
+            "asks": ["1@101"]}
+
+
+def _trade(pid, tid):
+    return {"out_type": "trade", "product_id": pid, "trade_id": tid,
+            "sequence": tid, "price": "100", "volume": "1", "side": "buy"}
+
+
+class TestFlatBatchSinks:
+    """Each sink of each micro-batch is one ``<sub>/_batch=<id>``
+    directory, overwritten statically: no per-product directories, rows
+    sorted by product_id inside every file."""
+
+    def test_rewrite_replaces_only_its_own_batch(self, spark, tmp_path):
+        from fictional_guacamole_spark.streaming.pipeline import (
+            make_batch_writer)
+
+        sink = str(tmp_path / "sink")
+        writer = make_batch_writer(sink)
+        writer(_batch_frame(spark, [_trade("A", 1), _trade("B", 2)]), 6)
+        writer(_batch_frame(spark, [_trade("A", 3), _trade("B", 4)]), 7)
+        writer(_batch_frame(spark, [_trade("C", 5)]), 7)   # replayed id
+        trades = spark.read.parquet(f"{sink}/trades")
+        got = {(r["_batch"], r["product_id"], r["trade_id"])
+               for r in trades.collect()}
+        assert got == {(6, "A", 1), (6, "B", 2), (7, "C", 5)}
+        assert sorted(os.listdir(f"{sink}/trades")) == [
+            "_batch=6", "_batch=7"]
+
+    def test_empty_books_leave_a_readable_batch(self, spark, tmp_path):
+        from fictional_guacamole_spark.streaming.pipeline import (
+            BOOK_COLS, make_batch_writer)
+
+        sink = str(tmp_path / "sink")
+        make_batch_writer(sink)(_batch_frame(spark, [_trade("A", 1)]), 3)
+        assert os.path.isdir(f"{sink}/books/_batch=3")
+        books = spark.read.parquet(f"{sink}/books")
+        assert books.count() == 0
+        assert books.columns == BOOK_COLS + ["_batch"]
+
+    def test_files_sorted_by_product(self, spark, tmp_path):
+        import pyarrow.parquet as pq
+
+        from fictional_guacamole_spark.streaming.pipeline import (
+            make_batch_writer)
+
+        pids = ["P%02d" % (i * 7 % 20) for i in range(40)]
+        batch = _batch_frame(
+            spark, [_book(p, f"{i}@100") for i, p in enumerate(pids)]
+            + [_trade(p, i) for i, p in enumerate(pids)]).repartition(2)
+        sink = str(tmp_path / "sink")
+        make_batch_writer(sink)(batch, 0)
+        for sub in ("books", "trades"):
+            cols = [pq.read_table(os.path.join(root, f)).column("product_id")
+                    .to_pylist()
+                    for root, _dirs, files in os.walk(f"{sink}/{sub}")
+                    for f in files if f.endswith(".parquet")]
+            assert all(c == sorted(c) for c in cols)
+            assert sorted(sum(cols, [])) == sorted(pids)
+            assert any(len(set(c)) > 1 for c in cols)   # non-vacuous
 
 
 class TestTwsBookKernel:
